@@ -180,7 +180,8 @@ def string_agg(c: Column | str, sep: str = ", ") -> Column:
 def title_case(c: Column | str) -> Column:
     """X21: Python ``str.title()`` ≈ ``initcap`` for space-separated ASCII
     words (semantics differ on apostrophes/digits — documented caveat,
-    SURVEY §2.7)."""
+    SURVEY §2.7).  The call-log QA frame does not use it: its category
+    literals are title-cased in Python (``plans/calls.py``)."""
     return F.initcap(_col(c))
 
 

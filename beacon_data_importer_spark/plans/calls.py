@@ -1,10 +1,12 @@
 """The call-log pipeline — Spark plans with the semantics of the
 reference's ``prepare-calls`` command (``prepare_calls.py:20-191``).
 
-One shared base frame (cached — the direct fix for the reference's ~12×
-CSV re-parse, ``prepare_calls.py:145-156,176-191``), nine derived frames,
-and a QA frame expressed as five real left joins instead of five
-driver-memory hash maps.
+One shared base frame, materialized once before any output is built
+(the direct fix for the reference's ~12× CSV re-parse,
+``prepare_calls.py:145-156,176-191``), nine derived frames, and a QA
+frame computed as ONE ``groupBy(nhs_number)`` over the base — every
+first-wins and multi-valued lookup of the reference's five driver-memory
+hash maps is an aggregate of that group — joined back by broadcast.
 
 Faithfully reproduced quirks (SURVEY §7.6.5):
   * the ``support_already_geting`` typo silently drops that field from
@@ -22,13 +24,15 @@ Spark has none) — the base frame carries ``__source_row`` assigned from
 CSV file order via zipWithIndex.
 
 100 TB posture: everything below is filters/projections/explode (narrow)
-plus the QA joins (broadcast — need-tables are per-import batches,
-bounded).  ``.cache()`` replaces re-parse; at warehouse scale the base
+plus the one QA aggregate (a key shuffle; its result, one row per
+contact, is broadcast back — per-import batches are bounded).
+``localCheckpoint`` replaces re-parse; at warehouse scale the base
 would be a written staging table.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -57,6 +61,43 @@ MSG_OTHER_NEED = (
 
 NEEDS_FIELDS = ["nhs_number", "category", "name", "created_at", "updated_at"]
 NOTES_FIELDS = ["nhs_number", "category", "body", "created_at", "updated_at"]
+
+#: the derived frames concatenated into remaining_needs, in output order
+REMAINING_NEEDS = (
+    "prescription_needs",
+    "mental_wellbeing_needs",
+    "financial_needs",
+    "other_needs",
+)
+
+#: The staging contract: each prepare-calls output CSV (by file stem) and
+#: its ordered header.  The writer projects every output onto it and
+#: ``import_stage.read_staging`` reads the files back with it as a
+#: declared schema, so a drifted header fails the import loudly.
+STAGING_COLUMNS: dict[str, list[str]] = {
+    "quality_assurance": [
+        "nhs_number",
+        "latest_attempt_date",
+        "original_triage_status",
+        "original_triage_call_notes",
+        "food_need",
+        "callback_need",
+        "remaining_needs",
+        "call_log",
+    ],
+    "contact_profile_updates": [
+        "nhs_number",
+        "additional_info",
+        "delivery_details",
+        "dietary_details",
+        "has_covid_symptoms",
+    ],
+    "original_triage_needs": [*NEEDS_FIELDS, "completed_on"],
+    "original_triage_notes": [*NOTES_FIELDS, "import_data"],
+    "food_needs": [*NEEDS_FIELDS, "completed_on", "supplemental_data", "user_id"],
+    "callback_needs": [*NEEDS_FIELDS, "start_on"],
+    "remaining_needs": [*NEEDS_FIELDS, "user_id"],
+}
 
 ROW = "__source_row"
 
@@ -137,11 +178,20 @@ def validate_calls_header(df: DataFrame) -> None:
         )
 
 
-def base_spreadsheet(spark: SparkSession, calls_file_path: str) -> DataFrame:
+def base_spreadsheet(
+    spark: SparkSession, calls_file_path: str, compose: BodyComposer | None = None
+) -> DataFrame:
     """The shared base plan (``prepare_calls.py:33-41``): windows-1252
     scan → rename → non-empty-date filter → provenance JSON (over RAW
     values — serialization happens before date conversion) → date parse →
-    created/updated stamps.  Cached: ~12 downstream consumers."""
+    created/updated stamps, plus ``call_log``: the row's labeled body
+    (``prepare_calls.py:193-201``), shared by the import notes, the QA
+    frame and the remaining-need names.
+
+    Materialized eagerly (``localCheckpoint``) before it is returned, so
+    the scan, the source-row numbering and the body run once, up front:
+    a lazy ``cache()`` would instead be filled by whichever output is
+    written first, while that output's other jobs re-read the CSV."""
     df = read_csv_stringly(spark, calls_file_path, encoding="windows-1252")
     validate_calls_header(df)
     # rename via aliasing select: the original headers contain dots/colons
@@ -158,18 +208,44 @@ def base_spreadsheet(spark: SparkSession, calls_file_path: str) -> DataFrame:
     )
     df = df.withColumn("created_at", F.col("latest_attempt_date"))
     df = df.withColumn("updated_at", F.col("latest_attempt_date"))
-    return df.cache()
+    df = df.withColumn("call_log", (compose or BodyComposer())())
+    return df.localCheckpoint()
 
 
-def _compose(overrides: dict[str, Column] | None = None, **kw) -> Column:
+class BodyComposer:
     """compose_body over the full labeled field list, with per-pipeline
-    overrides for converted columns (food_priority, callback_date)."""
-    overrides = overrides or {}
-    labeled = [
-        (label, overrides.get(logical, F.col(logical)))
-        for label, logical in LABELED_FIELDS
-    ]
-    return E.compose_body(labeled, **kw)
+    overrides for converted columns (food_priority, callback_date).
+
+    The 29 labeled pieces are built once per instance and shared by
+    every body of one plan build; build one per ``prepare_calls`` call
+    (Columns hold JVM handles of their session)."""
+
+    def __init__(self) -> None:
+        self.pieces = dict(
+            zip(
+                (logical for _, logical in LABELED_FIELDS),
+                E.labeled_pieces(
+                    (label, F.col(logical)) for label, logical in LABELED_FIELDS
+                ),
+            )
+        )
+
+    def __call__(
+        self,
+        overrides: dict[str, Column] | None = None,
+        prefix_lines: Sequence[str] = (),
+        prefix_cols: Sequence[Column] = (),
+    ) -> Column:
+        overrides = overrides or {}
+        pieces = [
+            E.labeled_pieces([(label, overrides[logical])])[0]
+            if logical in overrides
+            else self.pieces[logical]
+            for label, logical in LABELED_FIELDS
+        ]
+        # the prebuilt pieces go after the prefixes, exactly where
+        # compose_body puts the pieces it builds from labeled fields
+        return E.compose_body([], prefix_lines, [*prefix_cols, *pieces])
 
 
 # ---------------------------------------------------------------------------
@@ -213,27 +289,18 @@ def _needs_other_support() -> Column:
 
 
 # ---------------------------------------------------------------------------
-# the nine derived frames
+# per-row values shared by the derived frames and QA
 # ---------------------------------------------------------------------------
 
-def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
-    """All derived frames, each still carrying __source_row (callers
-    project it away via the *_FIELDS lists; QA uses it for source-order
-    string aggregation)."""
-    frames: dict[str, DataFrame] = {}
-
-    # original_triage_needs (``prepare_calls.py:46-52``)
-    frames["original_triage_needs"] = base.select(
-        ROW,
-        *[F.col(c) for c in ("nhs_number", "created_at", "updated_at")],
-        F.lit("phone triage").alias("category"),
-        F.lit(MSG_ORIGINAL_TRIAGE_NEED).alias("name"),
-        E.determine_completion(
-            "was_contact_made", ["yes", "no 3 attempts made"], "latest_attempt_date"
-        ).alias("completed_on"),
+def _triage_completed_on() -> Column:
+    return E.determine_completion(
+        "was_contact_made", ["yes", "no 3 attempts made"], "latest_attempt_date"
     )
 
-    # original_triage_call_notes via flatMap (``prepare_calls.py:55-61,248-274``)
+
+def _call_note_category_and_count() -> tuple[Column, Column]:
+    """The call-note generator (``prepare_calls.py:248-274``): each base
+    row yields ``count`` notes of ``category``."""
     lwcm = F.lower(F.col("was_contact_made"))
     failure_cat = F.when(
         F.col("outcome") == "Left voicemail", "phone_message"
@@ -257,6 +324,80 @@ def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
         .when(lwcm == "no 3 attempts made", 3)
         .otherwise(0)  # G2: unmatched rows yield zero note rows
     )
+    return category, count
+
+
+def _food_completed_on(priority: Column) -> Column:
+    return F.when(priority.isin("1", "2"), F.col("latest_attempt_date"))
+
+
+def _needs_callback(callback_date: Column) -> Column:
+    # the reference's `book_weekly_food_delivery == True` disjunct is dead
+    # (string vs Python True) and is reproduced as dead
+    return (
+        callback_date.isNotNull()
+        | _needs_food_raw()
+        | (F.col("outcome") == "Call back ")  # trailing space faithful
+    )
+
+
+def _callback_start_on(callback_date: Column) -> Column:
+    return F.coalesce(callback_date, F.date_add(F.col("latest_attempt_date"), 6))
+
+
+def _remaining_pipelines(users: CallsUsers) -> list[tuple[str, Column, str, Column]]:
+    """The ``REMAINING_NEEDS`` pipelines in output order
+    (``prepare_calls.py:92-129,342-348``): (frame key, row predicate,
+    category, user id)."""
+    other_user = (
+        F.when(_has_complex_other_need(), users.complex_needs_user)
+        .when(_has_simple_other_need(), users.simple_needs_user)
+        .otherwise(users.call_log_review_user)
+    )
+    pipelines = [
+        (
+            F.col("addl_medication_prescriptions") != "",
+            "prescription pickups",
+            F.lit(users.simple_needs_user),
+        ),
+        (
+            F.col("addl_mental_wellbeing") != "",
+            "physical and mental wellbeing",
+            F.lit(users.complex_needs_user),
+        ),
+        (
+            F.col("addl_financial") != "",
+            "financial support",
+            F.lit(users.complex_needs_user),
+        ),
+        (_needs_other_support(), "other", other_user),
+    ]
+    return [(key, *p) for key, p in zip(REMAINING_NEEDS, pipelines)]
+
+
+# ---------------------------------------------------------------------------
+# the nine derived frames
+# ---------------------------------------------------------------------------
+
+def derive_frames(
+    base: DataFrame, users: CallsUsers, compose: BodyComposer
+) -> dict[str, DataFrame]:
+    """All derived frames of ``base_spreadsheet``'s frame, each still
+    carrying __source_row (callers project it away via the staging
+    contract)."""
+    frames: dict[str, DataFrame] = {}
+
+    # original_triage_needs (``prepare_calls.py:46-52``)
+    frames["original_triage_needs"] = base.select(
+        ROW,
+        *[F.col(c) for c in ("nhs_number", "created_at", "updated_at")],
+        F.lit("phone triage").alias("category"),
+        F.lit(MSG_ORIGINAL_TRIAGE_NEED).alias("name"),
+        _triage_completed_on().alias("completed_on"),
+    )
+
+    # original_triage_call_notes via flatMap (``prepare_calls.py:55-61,248-274``)
+    category, count = _call_note_category_and_count()
     notes_base = base.select(
         ROW,
         "nhs_number",
@@ -279,7 +420,7 @@ def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
         "created_at",
         "updated_at",
         F.lit("phone_import").alias("category"),
-        _compose().alias("body"),
+        F.col("call_log").alias("body"),
         "import_data",
     )
 
@@ -298,19 +439,16 @@ def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
     ).otherwise(
         F.to_json(F.struct(F.lit("Grocery delivery").alias("food_service_type")))
     )
-    completed = F.when(
-        F.col("food_priority").isin("1", "2"), F.col("latest_attempt_date")
-    )
     food = (
         food.withColumn("supplemental_data", supplemental)
-        .withColumn("completed_on", completed)
+        .withColumn("completed_on", _food_completed_on(F.col("food_priority")))
         .withColumn("user_id", F.lit(users.food_needs_user))
     )
     frames["food_needs"] = food.withColumn(
         "category", F.lit("groceries and cooked meals")
     ).withColumn(
         "name",
-        _compose(
+        compose(
             overrides={"food_priority": F.col("food_priority")},
             prefix_lines=[MSG_GENERIC_NEED],
             prefix_cols=[
@@ -319,77 +457,40 @@ def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
         ),
     )
 
-    # callback_needs (``prepare_calls.py:82-90``); the reference's
-    # `book_weekly_food_delivery == True` disjunct is dead (string vs
-    # Python True) and is reproduced as dead.
+    # callback_needs (``prepare_calls.py:82-90``)
     cb = base.withColumn("callback_date", E.parse_embedded_date("callback_date"))
-    cb = cb.filter(
-        F.col("callback_date").isNotNull()
-        | _needs_food_raw()
-        | (F.col("outcome") == "Call back ")  # trailing space faithful
-    )
+    cb = cb.filter(_needs_callback(F.col("callback_date")))
     frames["callback_needs"] = cb.select(
         ROW,
         "nhs_number",
         "created_at",
         "updated_at",
         F.lit("phone triage").alias("category"),
-        _compose(
+        compose(
             overrides={"callback_date": F.col("callback_date").cast("string")},
             prefix_lines=[MSG_CALLBACK_NEED],
         ).alias("name"),
-        F.coalesce(
-            F.col("callback_date"), F.date_add(F.col("latest_attempt_date"), 6)
-        ).alias("start_on"),
+        _callback_start_on(F.col("callback_date")).alias("start_on"),
     )
 
-    # prescription / mental-wellbeing / financial needs
-    # (``prepare_calls.py:92-117``)
-    for key, flag, cat, user in (
-        (
-            "prescription_needs",
-            "addl_medication_prescriptions",
-            "prescription pickups",
-            users.simple_needs_user,
-        ),
-        (
-            "mental_wellbeing_needs",
-            "addl_mental_wellbeing",
-            "physical and mental wellbeing",
-            users.complex_needs_user,
-        ),
-        (
-            "financial_needs",
-            "addl_financial",
-            "financial support",
-            users.complex_needs_user,
-        ),
-    ):
-        frames[key] = base.filter(F.col(flag) != "").select(
+    # prescription / mental-wellbeing / financial / other needs
+    # (``prepare_calls.py:92-129,342-348``): the row's body under one
+    # prefix line (an empty body adds no line, as in compose_body)
+    other_body = F.concat_ws(
+        "\n",
+        F.lit(MSG_OTHER_NEED),
+        F.when(F.col("call_log") != "", F.col("call_log")),
+    )
+    for key, predicate, cat, user in _remaining_pipelines(users):
+        frames[key] = base.filter(predicate).select(
             ROW,
             "nhs_number",
             "created_at",
             "updated_at",
             F.lit(cat).alias("category"),
-            _compose(prefix_lines=[MSG_OTHER_NEED]).alias("name"),
-            F.lit(user).alias("user_id"),
+            other_body.alias("name"),
+            user.alias("user_id"),
         )
-
-    # other_needs (``prepare_calls.py:119-129,342-348``)
-    other_user = (
-        F.when(_has_complex_other_need(), users.complex_needs_user)
-        .when(_has_simple_other_need(), users.simple_needs_user)
-        .otherwise(users.call_log_review_user)
-    )
-    frames["other_needs"] = base.filter(_needs_other_support()).select(
-        ROW,
-        "nhs_number",
-        "created_at",
-        "updated_at",
-        F.lit("other").alias("category"),
-        _compose(prefix_lines=[MSG_OTHER_NEED]).alias("name"),
-        other_user.alias("user_id"),
-    )
 
     # contact_profile_updates (``prepare_calls.py:132-143``); the
     # additional_info pluck reproduces the reference's
@@ -417,130 +518,104 @@ def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
 
 
 # ---------------------------------------------------------------------------
-# QA (five left joins replacing five driver hash maps,
-# ``prepare_calls.py:145-173``)
+# QA: the reference's five lookup maps (``prepare_calls.py:145-173``) as
+# one aggregate over the base, grouped by contact
 # ---------------------------------------------------------------------------
 
-def _first_by_source(df: DataFrame, cols: list[str]) -> DataFrame:
-    w = Window.partitionBy("nhs_number").orderBy(ROW)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("nhs_number", *cols)
-    )
+def _first(value: Column, where: Column | None = None) -> Column:
+    """Aggregate: ``value`` of the group's first row in source order
+    (among rows matching ``where``); NULL when no row matches."""
+    item = F.struct(F.col(ROW).alias("r"), value.alias("v"))
+    if where is not None:
+        item = F.when(where, item)
+    return F.min(item)["v"]
 
 
-def quality_assurance(base: DataFrame, frames: dict[str, DataFrame]) -> DataFrame:
-    qa = base.withColumn("call_log", _compose())
+def _joined_or_null(items: Column, sep: str) -> Column:
+    """``sep``-joined strings; NULL for an empty list (the contact had
+    no matching rows — the reference's failed dict lookup)."""
+    return F.when(F.size(items) > 0, F.array_join(items, sep))
 
-    # original_triage_status — every base row has a triage need
-    otn = _first_by_source(frames["original_triage_needs"], ["completed_on"])
-    qa = qa.join(
-        F.broadcast(otn.withColumnRenamed("completed_on", "__otn_completed")),
-        "nhs_number",
-        "left",
-    ).withColumn(
-        "original_triage_status",
-        F.when(F.col("__otn_completed").isNotNull(), "Completed").otherwise("To do"),
-    )
 
-    # call-note categories, source-order comma-joined (multi-valued lookup)
-    notes = frames["original_triage_call_notes"]
-    notes_agg = notes.groupBy("nhs_number").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(ROW, "__attempt", "category"))
-                ),
-                lambda x: x["category"],
-            ),
-            ", ",
-        ).alias("original_triage_call_notes")
-    )
-    qa = qa.join(F.broadcast(notes_agg), "nhs_number", "left")
-
-    # food need status block
-    food = _first_by_source(
-        frames["food_needs"], ["completed_on", "user_id", "supplemental_data"]
-    )
+def quality_assurance(base: DataFrame, users: CallsUsers) -> DataFrame:
+    """One QA row per base row.  Each lookup of the reference is an
+    aggregate of the contact's base rows: first-wins lookups take
+    ``min(struct(__source_row, value))``, multi-valued ones collect
+    per-row arrays and sort them by source row."""
+    priority = E.parse_food_priority("food_priority")
     food_block = F.concat(
         F.lit("Food need created\nPriority: "),
-        F.coalesce(
-            F.get_json_object(F.col("supplemental_data"), "$.food_priority"),
-            F.lit(""),
-        ),
+        F.coalesce(priority, F.lit("")),
         F.lit("\nStatus: "),
-        F.when(F.col("completed_on").isNotNull(), "Completed").otherwise("To do"),
-        F.lit("\nAssigned to: "),
-        F.col("user_id").cast("string"),
+        F.when(_food_completed_on(priority).isNotNull(), "Completed").otherwise(
+            "To do"
+        ),
+        F.lit(f"\nAssigned to: {users.food_needs_user}"),
     )
-    qa = qa.join(
-        F.broadcast(food.select("nhs_number", food_block.alias("food_need"))),
-        "nhs_number",
-        "left",
-    )
-
-    # callback need block
-    cbn = _first_by_source(frames["callback_needs"], ["start_on"])
-    cb_block = F.concat(
+    callback_date = E.parse_embedded_date("callback_date")
+    callback_block = F.concat(
         F.lit("Callback need created\nStart on: "),
-        F.col("start_on").cast("string"),
+        _callback_start_on(callback_date).cast("string"),
     )
-    qa = qa.join(
-        F.broadcast(cbn.select("nhs_number", cb_block.alias("callback_need"))),
-        "nhs_number",
-        "left",
-    )
-
-    # remaining needs: 4-way cat in pipeline order, then per-key
-    # newline-joined "Category.title() (Assigned to N)" lines
-    remaining = None
-    for idx, key in enumerate(
-        ("prescription_needs", "mental_wellbeing_needs", "financial_needs", "other_needs")
-    ):
-        f = frames[key].select(
-            "nhs_number",
-            F.lit(idx).alias("__pipe"),
-            F.col(ROW).alias("__r"),
-            "category",
-            "user_id",
-        )
-        remaining = f if remaining is None else remaining.unionByName(f)
-    remaining_agg = (
-        remaining.groupBy("nhs_number")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("__pipe", "__r", "category", "user_id"))
-            ).alias("__items")
-        )
-        .select(
-            "nhs_number",
-            F.array_join(
-                F.transform(
-                    F.col("__items"),
-                    lambda x: F.concat(
-                        F.initcap(x["category"]),
-                        F.lit(" (Assigned to "),
-                        x["user_id"].cast("string"),
-                        F.lit(")"),
+    category, count = _call_note_category_and_count()
+    # remaining needs: (pipeline, row, line) per matching pipeline, where
+    # line = "{category.title()} (Assigned to {user_id})"
+    remaining = F.array_compact(
+        F.array(
+            *[
+                F.when(
+                    predicate,
+                    F.struct(
+                        F.lit(idx).alias("pipe"),
+                        F.col(ROW).alias("r"),
+                        F.concat(
+                            F.lit(f"{cat.title()} (Assigned to "),
+                            user.cast("string"),
+                            F.lit(")"),
+                        ).alias("line"),
                     ),
-                ),
-                "\n",
-            ).alias("remaining_needs"),
+                )
+                for idx, (_, predicate, cat, user) in enumerate(
+                    _remaining_pipelines(users)
+                )
+            ]
         )
     )
-    qa = qa.join(F.broadcast(remaining_agg), "nhs_number", "left")
 
-    return qa.select(
-        "nhs_number",
-        "latest_attempt_date",
-        "original_triage_status",
-        "original_triage_call_notes",
-        "food_need",
-        "callback_need",
-        "remaining_needs",
-        "call_log",
+    lookups = base.groupBy("nhs_number").agg(
+        F.when(_first(_triage_completed_on()).isNotNull(), "Completed")
+        .otherwise("To do")
+        .alias("original_triage_status"),
+        _joined_or_null(
+            F.flatten(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.struct(
+                                F.col(ROW).alias("r"),
+                                F.array_repeat(category, count).alias("c"),
+                            )
+                        )
+                    ),
+                    lambda x: x["c"],
+                )
+            ),
+            ", ",
+        ).alias("original_triage_call_notes"),
+        _first(food_block, _needs_food_raw()).alias("food_need"),
+        _first(callback_block, _needs_callback(callback_date)).alias(
+            "callback_need"
+        ),
+        _joined_or_null(
+            F.transform(
+                F.array_sort(F.flatten(F.collect_list(remaining))),
+                lambda x: x["line"],
+            ),
+            "\n",
+        ).alias("remaining_needs"),
     )
+    qa = base.join(F.broadcast(lookups), "nhs_number", "left")
+    return qa.select(*STAGING_COLUMNS["quality_assurance"])
 
 
 # ---------------------------------------------------------------------------
@@ -550,51 +625,31 @@ def quality_assurance(base: DataFrame, frames: dict[str, DataFrame]) -> DataFram
 def prepare_calls(
     spark: SparkSession, calls_file_path: str, users: CallsUsers
 ) -> dict[str, DataFrame]:
-    """All output frames keyed by their reference CSV name (sans .csv)."""
-    base = base_spreadsheet(spark, calls_file_path)
-    frames = derive_frames(base, users)
+    """All output frames keyed by their reference CSV name (sans .csv),
+    each projected onto its staging contract (``STAGING_COLUMNS``)."""
+    compose = BodyComposer()
+    base = base_spreadsheet(spark, calls_file_path, compose)
+    frames = derive_frames(base, users, compose)
 
-    def cut(name: str, cols: list[str]) -> DataFrame:
-        return frames[name].select(*cols)
-
-    call_notes = cut("original_triage_call_notes", NOTES_FIELDS)
-    import_notes = cut(
-        "original_triage_import_notes", [*NOTES_FIELDS, "import_data"]
-    )
     remaining = None
-    for key in (
-        "prescription_needs",
-        "mental_wellbeing_needs",
-        "financial_needs",
-        "other_needs",
-    ):
-        f = cut(key, [*NEEDS_FIELDS, "user_id"])
+    for key in REMAINING_NEEDS:
+        f = frames[key].select(*STAGING_COLUMNS["remaining_needs"])
         remaining = f if remaining is None else remaining.unionByName(f)
 
-    return {
-        "quality_assurance": quality_assurance(base, frames),
-        "contact_profile_updates": cut(
-            "contact_profile_updates",
-            [
-                "nhs_number",
-                "additional_info",
-                "delivery_details",
-                "dietary_details",
-                "has_covid_symptoms",
-            ],
-        ),
-        "original_triage_needs": cut(
-            "original_triage_needs", [*NEEDS_FIELDS, "completed_on"]
-        ),
+    outputs = {
+        "quality_assurance": quality_assurance(base, users),
+        "contact_profile_updates": frames["contact_profile_updates"],
+        "original_triage_needs": frames["original_triage_needs"],
         # etl.cat(import_notes, call_notes): call notes have no
         # import_data -> padded NULL (U1 semantics)
-        "original_triage_notes": import_notes.unionByName(
-            call_notes, allowMissingColumns=True
+        "original_triage_notes": frames["original_triage_import_notes"]
+        .select(*STAGING_COLUMNS["original_triage_notes"])
+        .unionByName(
+            frames["original_triage_call_notes"].select(*NOTES_FIELDS),
+            allowMissingColumns=True,
         ),
-        "food_needs": cut(
-            "food_needs",
-            [*NEEDS_FIELDS, "completed_on", "supplemental_data", "user_id"],
-        ),
-        "callback_needs": cut("callback_needs", [*NEEDS_FIELDS, "start_on"]),
+        "food_needs": frames["food_needs"],
+        "callback_needs": frames["callback_needs"],
         "remaining_needs": remaining,
     }
+    return {name: outputs[name].select(*cols) for name, cols in STAGING_COLUMNS.items()}

@@ -6,7 +6,8 @@ three scripts; the one hard construct is the data-modifying CTE with
 RETURNING (insert triage needs, capture generated ids, attach notes to
 those fresh ids — ``import_original_triage_needs_and_notes.sql:5-40``).
 Spark emulation: assign ``id = max_existing + row_number()`` BEFORE the
-append, keep the id-bearing frame, and run the notes join against it.
+append, pin the id-bearing frame (``localCheckpoint``), and run the notes
+join against it.
 Note multiplication semantics are preserved: a contact with N inserted
 needs × M staged notes yields N×M note rows, exactly like the SQL.
 
@@ -22,10 +23,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
-from pyspark.sql import SparkSession
 from pyspark.sql.types import (
     BooleanType,
     DateType,
@@ -37,6 +36,9 @@ from pyspark.sql.types import (
 
 from ..operators.surrogate import assign_surrogate_ids
 from ..operators.upsert import update_from
+from ..sources.csv import read_csv_declared
+from .calls import STAGING_COLUMNS
+from .contacts import OUTPUT_COLUMNS as CONTACTS_CSV_COLUMNS
 
 # Typed staging boundary — the engine's equivalent of
 # ``create_tmp_tables.sql:1-41`` (S7): the all-string prepared CSVs are
@@ -83,25 +85,29 @@ STAGING_SCHEMAS: dict[str, StructType] = {
 }
 
 
-def read_staging(spark: SparkSession, csv_path: str, kind: str) -> DataFrame:
-    """Load a prepared CSV into its typed staging frame (the ``\\COPY``
-    + typed-tmp-table step, S6/S7).  Empty cells → NULL, then cast per
-    the declared schema; 'True'/'False' strings → boolean."""
+def read_staging(
+    spark: SparkSession, staging_dir: str, name: str, kind: str
+) -> DataFrame:
+    """Load the prepared CSV ``name`` into its typed staging frame (the
+    ``\\COPY`` + typed-tmp-table step, S6/S7).  The file is read with its
+    staging-contract header as a declared schema (``STAGING_COLUMNS``),
+    so a drifted header fails the import naming the file.  Empty cells →
+    NULL, then cast per the ``kind`` schema; 'True'/'False' strings →
+    boolean; schema fields outside the file's contract are padded NULL
+    (the three needs CSVs carry different column subsets — ``\\COPY``
+    with a column list)."""
+    from os.path import join
+
     schema = STAGING_SCHEMAS[kind]
+    columns = STAGING_COLUMNS[name]
     # multiLine: note bodies / need names contain embedded newlines
     # (compose_body); escape='"' matches csv-writer quote doubling.
-    raw = (
-        spark.read.option("header", True)
-        .option("inferSchema", False)
-        .option("multiLine", True)
-        .option("escape", '"')
-        .csv(csv_path)
+    raw = read_csv_declared(
+        spark, join(staging_dir, f"{name}.csv"), columns, multiLine="true", escape='"'
     )
     cols = []
     for f in schema.fields:
-        if f.name not in raw.columns:
-            # the three needs CSVs carry different column subsets; the
-            # staging table pads the rest (\COPY with a column list)
+        if f.name not in columns:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
             continue
         c = F.when(F.col(f.name) != "", F.col(f.name))  # '' -> NULL
@@ -117,9 +123,12 @@ def read_staging(spark: SparkSession, csv_path: str, kind: str) -> DataFrame:
 
 def _max_id(df: DataFrame, id_col: str = "id") -> int:
     """Current max surrogate id (0 for an empty table).  A driver-side
-    scalar — one value, not a materialization — and one such job per
-    import BATCH, which is fine for the reference's dimension-sized
-    imports (RETURNING emulation inherently reads back a scalar).  Do
+    scalar — one value, not a materialization — and at most one such job
+    per existing table per import BATCH: a table that does not exist yet
+    starts at 0 without one, and the id offset after an insert is known
+    from the inserted row count (see ``run_import``).  Fine for the
+    reference's dimension-sized imports (RETURNING emulation inherently
+    reads back a scalar).  Do
     NOT reach for this on a per-row or per-partition cadence: the
     fact-table path is ``operators/surrogate.assign_surrogate_ids_
     scalable`` (zipWithIndex-free prefix-sum ids), which never runs a
@@ -133,6 +142,8 @@ class ImportResult:
     contacts: DataFrame
     needs: DataFrame
     notes: DataFrame
+    #: max needs id once the triage needs are in (the next INSERT's offset)
+    needs_max_id: int
 
 
 def contacts_map(contacts: DataFrame) -> DataFrame:
@@ -147,20 +158,30 @@ def import_original_triage_needs_and_notes(
     notes: DataFrame,
     tmp_needs: DataFrame,
     tmp_notes: DataFrame,
+    needs_max_id: int | None = None,
+    notes_max_id: int | None = None,
 ) -> ImportResult:
     """``import_original_triage_needs_and_notes.sql`` — the RETURNING
     pipeline.  Order of generated ids: (nhs_number, __source ordering via
     row_number over nhs_number) — Postgres RETURNING order is arbitrary;
-    the engine pins a deterministic one."""
+    the engine pins a deterministic one.  ``*_max_id`` are the tables'
+    current max ids when the caller knows them (else read by
+    ``_max_id``).
+
+    The inserted needs are pinned (``localCheckpoint``): the needs
+    write and the notes join read the same ids without re-running the
+    id window, and their count gives the next offset without a job over
+    the needs table."""
     cmap = F.broadcast(contacts_map(contacts))
+    start = _max_id(needs) if needs_max_id is None else needs_max_id
 
     resolved = tmp_needs.join(cmap, "nhs_number")  # inner: unmatched drop out
     inserted = assign_surrogate_ids(
         resolved,
         ["nhs_number", "category", "name"],
         id_col="id",
-        start_after=_max_id(needs),
-    )
+        start_after=start,
+    ).localCheckpoint()
     new_needs = inserted.select(
         "id",
         "contact_id",
@@ -188,24 +209,33 @@ def import_original_triage_needs_and_notes(
         attached,
         ["need_id", "category", "body"],
         id_col="id",
-        start_after=_max_id(notes),
+        start_after=_max_id(notes) if notes_max_id is None else notes_max_id,
     )
     notes_out = notes.unionByName(new_notes, allowMissingColumns=True)
-    return ImportResult(contacts=contacts, needs=needs_out, notes=notes_out)
+    return ImportResult(
+        contacts=contacts,
+        needs=needs_out,
+        notes=notes_out,
+        needs_max_id=start + inserted.count(),
+    )
 
 
 def import_identified_needs(
-    contacts: DataFrame, needs: DataFrame, tmp_identified_needs: DataFrame
+    contacts: DataFrame,
+    needs: DataFrame,
+    tmp_identified_needs: DataFrame,
+    needs_max_id: int | None = None,
 ) -> DataFrame:
     """``import_identified_needs.sql:6-27`` — INSERT…SELECT with the
-    contact-id resolution join."""
+    contact-id resolution join; ids continue after ``needs_max_id``
+    (read by ``_max_id`` when not given)."""
     cmap = F.broadcast(contacts_map(contacts))
     resolved = tmp_identified_needs.join(cmap, "nhs_number")
     inserted = assign_surrogate_ids(
         resolved,
         ["nhs_number", "category", "name"],
         id_col="id",
-        start_after=_max_id(needs),
+        start_after=_max_id(needs) if needs_max_id is None else needs_max_id,
     )
     new_needs = inserted.select(
         "id",
@@ -257,8 +287,9 @@ def init_contacts_from_csv(spark: SparkSession, contacts_csv: str) -> DataFrame:
     """Create the persistent ``contacts`` table from a prepared
     contacts.csv (the step the Beacon app itself performs): surrogate ids
     assigned deterministically by nhs_number order; profile columns start
-    NULL."""
-    raw = spark.read.option("header", True).csv(contacts_csv)
+    NULL.  The file is read with the prepare-contacts header as a
+    declared schema (no inference job; a drifted header fails loudly)."""
+    raw = read_csv_declared(spark, contacts_csv, CONTACTS_CSV_COLUMNS)
     base = raw.select(
         F.when(F.col("nhs_number") != "", F.col("nhs_number")).alias("nhs_number"),
         "first_name",
@@ -281,15 +312,20 @@ def run_import(spark: SparkSession, db_dir: str, staging_dir: str) -> dict[str, 
     """Execute the full import workflow (``README.md:64-101``) against a
     parquet database directory:
 
-      1. load staging CSVs into typed frames (tmp tables);
+      1. load staging CSVs into typed frames (tmp tables), each checked
+         against its staging-contract header;
          the three needs files (food/callback/remaining) union into
          tmp_identified_needs exactly like the three ``\\COPY`` calls;
-      2. triage needs + notes via the RETURNING pipeline;
-      3. identified needs INSERT…SELECT;
+      2. triage needs + notes via the RETURNING pipeline; ids start
+         after the table's max id, or at 1 when the table does not
+         exist yet;
+      3. identified needs INSERT…SELECT, ids continuing after the
+         triage needs (offset = start + inserted triage rows);
       4. contact profile UPDATE…FROM;
       5. atomically swap the new table versions in.
 
-    Returns row counts per table.  Writes go to ``*.new`` then rename —
+    Returns row counts per table, observed on each write
+    (``DataFrame.observe``).  Writes go to ``*.new`` then rename —
     Spark cannot overwrite an input path it is lazily reading.
     """
     import os
@@ -298,46 +334,62 @@ def run_import(spark: SparkSession, db_dir: str, staging_dir: str) -> dict[str, 
 
     contacts = spark.read.parquet(join(db_dir, "contacts.parquet"))
 
-    def load_or_empty(name: str, schema: StructType) -> DataFrame:
+    def load_or_empty(name: str, schema: StructType) -> tuple[DataFrame, int]:
         p = join(db_dir, f"{name}.parquet")
         if os.path.exists(p):
-            return spark.read.parquet(p)
-        return spark.createDataFrame([], schema)
+            df = spark.read.parquet(p)
+            return df, _max_id(df)
+        # a typed empty frame the optimizer drops from every union
+        # (``limit(0)``): no task scans it, while the union still takes
+        # the table's column types
+        empty = spark.range(1).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+        )
+        return empty.limit(0), 0
 
-    needs = load_or_empty("needs", NEEDS_SCHEMA)
-    notes = load_or_empty("notes", NOTES_SCHEMA)
+    needs, needs_max = load_or_empty("needs", NEEDS_SCHEMA)
+    notes, notes_max = load_or_empty("notes", NOTES_SCHEMA)
 
     tmp_triage = read_staging(
-        spark, join(staging_dir, "original_triage_needs.csv"), "original_triage_needs"
+        spark, staging_dir, "original_triage_needs", "original_triage_needs"
     )
     tmp_notes = read_staging(
-        spark, join(staging_dir, "original_triage_notes.csv"), "original_triage_notes"
+        spark, staging_dir, "original_triage_notes", "original_triage_notes"
     )
-    ident_parts = []
-    for f in ("food_needs.csv", "callback_needs.csv", "remaining_needs.csv"):
-        df = read_staging(spark, join(staging_dir, f), "identified_needs")
-        ident_parts.append(df)
+    ident_parts = [
+        read_staging(spark, staging_dir, name, "identified_needs")
+        for name in ("food_needs", "callback_needs", "remaining_needs")
+    ]
     tmp_ident = ident_parts[0]
     for df in ident_parts[1:]:
         tmp_ident = tmp_ident.unionByName(df)
     tmp_updates = read_staging(
-        spark,
-        join(staging_dir, "contact_profile_updates.csv"),
-        "contact_profile_updates",
+        spark, staging_dir, "contact_profile_updates", "contact_profile_updates"
     )
 
     res = import_original_triage_needs_and_notes(
-        contacts, needs, notes, tmp_triage, tmp_notes
+        contacts, needs, notes, tmp_triage, tmp_notes, needs_max, notes_max
     )
-    needs2 = import_identified_needs(contacts, res.needs, tmp_ident)
+    needs2 = import_identified_needs(
+        contacts, res.needs, tmp_ident, res.needs_max_id
+    )
     contacts2 = import_contact_profile_updates(contacts, tmp_updates)
 
     outputs = {"contacts": contacts2, "needs": needs2, "notes": res.notes}
     counts: dict[str, int] = {}
-    for name, df in outputs.items():
-        new = join(db_dir, f"{name}.parquet.new")
-        df.write.mode("overwrite").parquet(new)
-        counts[name] = spark.read.parquet(new).count()
+    try:
+        for name, df in outputs.items():
+            rows = Observation()
+            df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite"
+            ).parquet(join(db_dir, f"{name}.parquet.new"))
+            counts[name] = rows.get["n"]
+    except Exception:
+        # e.g. a staging header that breaks its contract: leave the
+        # database exactly as it was
+        for name in outputs:
+            shutil.rmtree(join(db_dir, f"{name}.parquet.new"), ignore_errors=True)
+        raise
     for name in outputs:
         final = join(db_dir, f"{name}.parquet")
         if os.path.exists(final):

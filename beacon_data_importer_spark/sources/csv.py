@@ -17,9 +17,24 @@ still reaches the FileScan because the projection is per-column.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 
 def col_exact(name: str) -> Column:
@@ -56,6 +71,27 @@ def read_csv_stringly(
     )
 
 
+def read_csv_declared(
+    spark: SparkSession, path: str, columns: list[str], **options: str
+) -> DataFrame:
+    """Read a CSV whose header is a known contract: ``columns``, in
+    order, every cell a string (empty → NULL, Spark's default).
+
+    The schema is declared, so no job runs to infer it, and
+    ``enforceSchema=false`` makes the scan itself check each file's
+    header against ``columns``: a renamed, missing or extra column fails
+    the first job that reads the file, with the file named in the
+    error."""
+    schema = StructType([StructField(c, StringType()) for c in columns])
+    return (
+        spark.read.schema(schema)
+        .option("header", True)
+        .option("enforceSchema", False)
+        .options(**options)
+        .csv(path)
+    )
+
+
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Distributed CSV sink (one file per partition) — the scale path.
 
@@ -85,32 +121,62 @@ def _petl_cell(v) -> str:
     return str(v)
 
 
+#: column types whose Arrow values convert to the same Python objects as
+#: ``Row`` fields, so the sinks below format them identically either way
+_ARROW_EXACT = (
+    StringType,
+    BooleanType,
+    ByteType,
+    ShortType,
+    IntegerType,
+    LongType,
+    FloatType,
+    DoubleType,
+    DecimalType,
+    DateType,
+)
+
+
+def _collect_rows(df: DataFrame) -> Iterable[tuple]:
+    """Every row of ``df`` as a tuple, in partition order.
+
+    Frames of plain column types come back through one Arrow job
+    (``toArrow``), transposed column by column on the driver; others
+    (timestamps, nested types — whose Arrow values are tz-aware or
+    dicts rather than what ``Row`` yields) go through
+    ``toLocalIterator``, one job per partition."""
+    if all(isinstance(f.dataType, _ARROW_EXACT) for f in df.schema.fields):
+        table = df.toArrow()
+        return zip(*(c.to_pylist() for c in table.columns))
+    return df.toLocalIterator()
+
+
 def write_csv_file(df: DataFrame, path: str) -> None:
     """Write ONE real CSV file at ``path`` with petl-compatible cell
     formatting — byte-parity with the reference's ``.tocsv(path)``
-    (``prepare_calls.py:176-191``).  Streams through the driver
-    (toLocalIterator): CLI-parity path for council-sized outputs; the
-    scale path is :func:`write_csv`."""
+    (``prepare_calls.py:176-191``).  The whole frame is collected to the
+    driver in one job (:func:`_collect_rows`): CLI-parity path for
+    council-sized outputs; the scale path is :func:`write_csv`."""
     import csv as _csv
 
     with open(path, "w", newline="") as fh:
         w = _csv.writer(fh)
         w.writerow(df.columns)
-        for row in df.toLocalIterator():
+        for row in _collect_rows(df):
             w.writerow([_petl_cell(v) for v in row])
 
 
 def csv_to_stdout(df: DataFrame) -> None:
-    """Stream the frame as CSV to stdout — parity with ``.tocsv()`` piping
+    """Write the frame as CSV to stdout — parity with ``.tocsv()`` piping
     (reference ``prepare_contacts.py:44``, ``README.md:26-32``).
 
-    Uses toLocalIterator to avoid materializing the whole frame on the
-    driver; still inherently a driver funnel, CLI-parity only.
+    The whole frame is collected to the driver in one job
+    (:func:`_collect_rows`); a driver funnel, CLI-parity only.
     """
     import csv as _csv
     import sys
 
     w = _csv.writer(sys.stdout, lineterminator=os.linesep)
     w.writerow(df.columns)
-    for row in df.toLocalIterator():
+    for row in _collect_rows(df):
         w.writerow(["" if v is None else v for v in row])

@@ -82,12 +82,19 @@ def read_table_parallel(
     fewer partitions locally — per-partition Arrow/worker overhead
     dominates small inputs).  Per-row values are partitioning-
     invariant, so results are unchanged either way (oracle-gated).
+    Only the tables in ``_PARALLEL_KEY`` have a repartition key; any
+    other name is a ``ValueError``.
     """
+    if name not in _PARALLEL_KEY:
+        raise ValueError(
+            f"read_table_parallel: no repartition key for table {name!r} "
+            f"(known: {', '.join(sorted(_PARALLEL_KEY))})"
+        )
     df = read_table(spark, sf_dir, name)
     target = n or spark.sparkContext.defaultParallelism
     if _scan_splits(spark, sf_dir, name) >= target:
         return df
-    return df.repartition(target, _PARALLEL_KEY.get(name, "doc_id"))
+    return df.repartition(target, _PARALLEL_KEY[name])
 
 
 def register_views(

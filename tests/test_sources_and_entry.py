@@ -164,3 +164,39 @@ def test_cli_query_subcommand_lists_and_runs(capsys):
     out = capsys.readouterr().out.strip().splitlines()
     assert out[0].startswith("returnflag,")
     assert len(out) == 3  # header + 2 rows
+
+
+def test_read_table_parallel_rejects_unknown_table(spark, sf_dir):
+    """Only tables with a declared repartition key may be read through
+    the parallel scan; others fail before any scan."""
+    import pytest
+
+    from beacon_data_importer_spark.sources.parquet import read_table_parallel
+
+    with pytest.raises(ValueError, match="'orders'"):
+        read_table_parallel(spark, sf_dir, "orders")
+
+
+def test_cli_sink_rows_match_row_objects(spark):
+    """The CLI sinks' one-job Arrow collect yields the values ``Row``
+    objects hold, so cells format identically; frames with other types
+    (timestamps, arrays) fall back to the row path."""
+    from beacon_data_importer_spark.sources.csv import _collect_rows, _petl_cell
+
+    plain = spark.sql(
+        """
+        SELECT * FROM VALUES
+          ('café', true, CAST(1 AS TINYINT), CAST(-2 AS SMALLINT), 3, 4L,
+           CAST(0.1 AS FLOAT), 0.1D, CAST(1.50 AS DECIMAL(10, 2)),
+           DATE'2020-04-06'),
+          (NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)
+        AS t(s, b, i1, i2, i4, i8, f, d, dec, dt)
+        """
+    )
+    other = spark.sql(
+        "SELECT TIMESTAMP'2020-04-06 12:00:00' AS ts, array(1, 2) AS a"
+    )
+    for df in (plain, other):
+        want = [[_petl_cell(v) for v in r] for r in df.collect()]
+        got = [[_petl_cell(v) for v in r] for r in _collect_rows(df)]
+        assert got == want
