@@ -23,6 +23,40 @@ def _col(c: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
+# ASCII case fold (the reference's ``str.lower()`` comparisons)
+# ---------------------------------------------------------------------------
+
+#: A–Z plus the Kelvin sign U+212A, the one non-ASCII code point whose
+#: lower case is ASCII ('k'); every other non-ASCII letter lowers to a
+#: string that is not all ASCII (Spark's ``lower('İ')`` is 'i̇': 'i'
+#: and a combining dot).
+_FOLD_FROM = "ABCDEFGHIJKLMNOPQRSTUVWXYZ\u212a"
+_FOLD_TO = "abcdefghijklmnopqrstuvwxyzk"
+
+
+def ascii_lower(c: Column | str) -> Column:
+    """``lower(c)`` for comparison against ASCII literals: ``=`` and
+    ``isin`` against ASCII strings give exactly what they give on
+    ``F.lower(c)``, since a value lowers to an all-ASCII string only if
+    it is made of ASCII characters and Kelvin signs, where the two folds
+    agree.
+
+    A ``translate``, not ``lower``: the first ``lower``/``upper``/
+    ``initcap`` a JVM evaluates builds Spark's ICU case tables, ~1.5 s
+    on one core, which every CLI process would pay."""
+    return F.translate(_col(c), _FOLD_FROM, _FOLD_TO)
+
+
+def _require_ascii(literals: Iterable[str]) -> None:
+    """``ascii_lower``'s contract: what it is compared with is ASCII."""
+    bad = [v for v in literals if not v.isascii()]
+    if bad:
+        raise ValueError(
+            f"case-folded comparison needs ASCII literals, got {bad!r}"
+        )
+
+
+# ---------------------------------------------------------------------------
 # nullability / empty-string bridging (SURVEY §4.3.4)
 # ---------------------------------------------------------------------------
 
@@ -35,11 +69,12 @@ def blank_to_null(c: Column | str) -> Column:
 
 
 def nullify_no(c: Column | str) -> Column:
-    """Pass the value through unless it strips/lowers to 'no' (→ NULL) or
-    is blank.  X8 — dietary details (``prepare_calls.py:228-230``)."""
+    """Pass the value through unless it strips and ASCII-folds to 'no'
+    (→ NULL) or is blank.  X8 — dietary details
+    (``prepare_calls.py:228-230``)."""
     c = _col(c)
     t = F.trim(c)
-    return F.when((F.lower(t) != "no") & (t != ""), c)
+    return F.when((ascii_lower(t) != "no") & (t != ""), c)
 
 
 # ---------------------------------------------------------------------------
@@ -85,8 +120,13 @@ def regex_extract_or_null(c: Column | str, pattern: str, group: int = 1) -> Colu
 
 def parse_food_priority(c: Column | str) -> Column:
     """X11 (``prepare_calls.py:276-278``): case-insensitive
-    ``priority (\\d)`` → the digit as a string; no match → NULL."""
-    return regex_extract_or_null(F.lower(_col(c)), r"priority (\d)", 1)
+    ``priority (\\d)`` → the digit as a string; no match → NULL.  The
+    ASCII fold finds the same match as ``lower``: the two differ only
+    at non-ASCII characters, which the pattern cannot match (``\\d`` is
+    ASCII-only), and the one ASCII letter ``lower`` makes from one
+    ('i' of 'İ') is followed by a combining dot, never by the 'o' or 't'
+    that follows each 'i' of the pattern."""
+    return regex_extract_or_null(ascii_lower(c), r"priority (\d)", 1)
 
 
 # ---------------------------------------------------------------------------
@@ -139,9 +179,9 @@ def compose_body(
 # ---------------------------------------------------------------------------
 
 def parse_yes_no(c: Column | str) -> Column:
-    """X10 (``prepare_calls.py:239-246``): strip+lower; 'yes' → true,
-    'no' → false, anything else → NULL (3-valued boolean)."""
-    t = F.lower(F.trim(_col(c)))
+    """X10 (``prepare_calls.py:239-246``): strip + ASCII fold; 'yes' →
+    true, 'no' → false, anything else → NULL (3-valued boolean)."""
+    t = ascii_lower(F.trim(_col(c)))
     return F.when(t == "yes", F.lit(True)).when(t == "no", F.lit(False))
 
 
@@ -152,10 +192,13 @@ def determine_completion(
     case_insensitive: bool = True,
 ) -> Column:
     """X9/X12 (``prepare_calls.py:235-237,280-281``): completion date =
-    ``date`` iff the (lowered) status is in ``completed_values``."""
+    ``date`` iff the (ASCII-folded) status is in ``completed_values``.
+    Case-insensitive matching needs ASCII ``completed_values``
+    (``ValueError`` otherwise)."""
     s = _col(status)
     if case_insensitive:
-        s = F.lower(s)
+        _require_ascii(completed_values)
+        s = ascii_lower(s)
     return F.when(s.isin(*completed_values), _col(date))
 
 
@@ -166,7 +209,7 @@ def callback_start_date(callback: Column | str, latest_attempt: Column | str) ->
 
 
 # ---------------------------------------------------------------------------
-# grouped string aggregation (X18, X21) and title-casing
+# grouped string aggregation (X18)
 # ---------------------------------------------------------------------------
 
 def string_agg(c: Column | str, sep: str = ", ") -> Column:
@@ -175,14 +218,6 @@ def string_agg(c: Column | str, sep: str = ", ") -> Column:
     had source order; Spark has no implicit row order, so the engine
     pins lexicographic order (the oracle uses ``ORDER BY`` to match)."""
     return F.array_join(F.array_sort(F.collect_list(_col(c))), sep)
-
-
-def title_case(c: Column | str) -> Column:
-    """X21: Python ``str.title()`` ≈ ``initcap`` for space-separated ASCII
-    words (semantics differ on apostrophes/digits — documented caveat,
-    SURVEY §2.7).  The call-log QA frame does not use it: its category
-    literals are title-cased in Python (``plans/calls.py``)."""
-    return F.initcap(_col(c))
 
 
 # ---------------------------------------------------------------------------

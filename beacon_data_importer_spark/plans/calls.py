@@ -301,7 +301,7 @@ def _triage_completed_on() -> Column:
 def _call_note_category_and_count() -> tuple[Column, Column]:
     """The call-note generator (``prepare_calls.py:248-274``): each base
     row yields ``count`` notes of ``category``."""
-    lwcm = F.lower(F.col("was_contact_made"))
+    lwcm = E.ascii_lower("was_contact_made")
     failure_cat = F.when(
         F.col("outcome") == "Left voicemail", "phone_message"
     ).otherwise("phone_failure")

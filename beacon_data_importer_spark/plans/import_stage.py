@@ -34,6 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.expressions import ascii_lower
 from ..operators.surrogate import assign_surrogate_ids
 from ..operators.upsert import update_from
 from ..sources.csv import read_csv_declared
@@ -85,6 +86,14 @@ STAGING_SCHEMAS: dict[str, StructType] = {
 }
 
 
+def parse_staging_bool(c: Column) -> Column:
+    """A staged 'True'/'False' cell (any case) → boolean; else NULL."""
+    folded = ascii_lower(c)
+    return F.when(folded == "true", F.lit(True)).when(
+        folded == "false", F.lit(False)
+    )
+
+
 def read_staging(
     spark: SparkSession, staging_dir: str, name: str, kind: str
 ) -> DataFrame:
@@ -112,9 +121,7 @@ def read_staging(
             continue
         c = F.when(F.col(f.name) != "", F.col(f.name))  # '' -> NULL
         if isinstance(f.dataType, BooleanType):
-            c = F.when(F.lower(c) == "true", F.lit(True)).when(
-                F.lower(c) == "false", F.lit(False)
-            )
+            c = parse_staging_bool(c)
         else:
             c = c.cast(f.dataType)
         cols.append(c.alias(f.name))
@@ -308,9 +315,12 @@ def init_contacts_from_csv(spark: SparkSession, contacts_csv: str) -> DataFrame:
     )
 
 
-def run_import(spark: SparkSession, db_dir: str, staging_dir: str) -> dict[str, int]:
-    """Execute the full import workflow (``README.md:64-101``) against a
-    parquet database directory:
+def import_outputs(
+    spark: SparkSession, db_dir: str, staging_dir: str
+) -> dict[str, DataFrame]:
+    """The new versions of the ``contacts``, ``needs`` and ``notes``
+    tables (``README.md:64-101``), built from the parquet database
+    directory and the staging CSVs:
 
       1. load staging CSVs into typed frames (tmp tables), each checked
          against its staging-contract header;
@@ -321,15 +331,9 @@ def run_import(spark: SparkSession, db_dir: str, staging_dir: str) -> dict[str, 
          exist yet;
       3. identified needs INSERT…SELECT, ids continuing after the
          triage needs (offset = start + inserted triage rows);
-      4. contact profile UPDATE…FROM;
-      5. atomically swap the new table versions in.
-
-    Returns row counts per table, observed on each write
-    (``DataFrame.observe``).  Writes go to ``*.new`` then rename —
-    Spark cannot overwrite an input path it is lazily reading.
+      4. contact profile UPDATE…FROM.
     """
     import os
-    import shutil
     from os.path import join
 
     contacts = spark.read.parquet(join(db_dir, "contacts.parquet"))
@@ -374,19 +378,47 @@ def run_import(spark: SparkSession, db_dir: str, staging_dir: str) -> dict[str, 
         contacts, res.needs, tmp_ident, res.needs_max_id
     )
     contacts2 = import_contact_profile_updates(contacts, tmp_updates)
+    return {"contacts": contacts2, "needs": needs2, "notes": res.notes}
 
-    outputs = {"contacts": contacts2, "needs": needs2, "notes": res.notes}
-    counts: dict[str, int] = {}
+
+def run_import(spark: SparkSession, db_dir: str, staging_dir: str) -> dict[str, int]:
+    """Execute the full import workflow against a parquet database
+    directory: build the new table versions (:func:`import_outputs`),
+    write all three at once, then swap them in.
+
+    The writes run concurrently, one thread per table, each to
+    ``{name}.parquet.new`` (Spark cannot overwrite an input path it is
+    lazily reading); their jobs share the cores.  The swap is
+    all-or-nothing: it starts only after every write has finished, and
+    if any write fails (e.g. a staging header that breaks its contract)
+    the others are waited for, every ``*.new`` directory is removed and
+    the database is left exactly as it was.
+
+    Returns row counts per table, observed on each write
+    (``DataFrame.observe``).
+    """
+    import os
+    import shutil
+    from concurrent.futures import ThreadPoolExecutor
+    from os.path import join
+
+    outputs = import_outputs(spark, db_dir, staging_dir)
+
+    def write(name: str, df: DataFrame) -> int:
+        rows = Observation()
+        df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(join(db_dir, f"{name}.parquet.new"))
+        return rows.get["n"]
+
     try:
-        for name, df in outputs.items():
-            rows = Observation()
-            df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).parquet(join(db_dir, f"{name}.parquet.new"))
-            counts[name] = rows.get["n"]
+        # leaving the block waits for every write, failed or not
+        with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
+            written = {
+                name: pool.submit(write, name, df) for name, df in outputs.items()
+            }
+        counts = {name: w.result() for name, w in written.items()}
     except Exception:
-        # e.g. a staging header that breaks its contract: leave the
-        # database exactly as it was
         for name in outputs:
             shutil.rmtree(join(db_dir, f"{name}.parquet.new"), ignore_errors=True)
         raise

@@ -156,7 +156,11 @@ def write_csv_file(df: DataFrame, path: str) -> None:
     formatting — byte-parity with the reference's ``.tocsv(path)``
     (``prepare_calls.py:176-191``).  The whole frame is collected to the
     driver in one job (:func:`_collect_rows`): CLI-parity path for
-    council-sized outputs; the scale path is :func:`write_csv`."""
+    council-sized outputs; the scale path is :func:`write_csv`.
+
+    Safe to call from several threads at once on different paths (the
+    CLI writes its outputs concurrently); each call holds its whole
+    frame in driver memory until the file is written."""
     import csv as _csv
 
     with open(path, "w", newline="") as fh:

@@ -10,8 +10,9 @@ row order, cell formatting or id assignment shows up here — the
 reference-parity tests in ``test_plans.py`` compare sorted rows only.
 
 A second ``run-import`` into the same db dir covers the path where
-``needs``/``notes`` already exist, and a drifted staging header must
-fail loudly with the file named.
+``needs``/``notes`` already exist, a drifted staging header must fail
+loudly with the file named, and no plan of the pipeline may use Spark's
+ICU case mapping.
 """
 
 from __future__ import annotations
@@ -206,18 +207,35 @@ def test_reimport_continues_ids(spark, pipelines, tmp_path):
     assert _db_hashes(spark, db) == GOLDEN_REIMPORT
 
 
-@pytest.mark.parametrize("drift", ["renamed", "missing"])
-def test_staging_header_drift_fails_loudly(spark, pipelines, tmp_path, drift):
+@pytest.mark.parametrize(
+    "drift,name,column",
+    [
+        pytest.param("renamed", "food_needs", "user_id", id="renamed"),
+        pytest.param("missing", "food_needs", "user_id", id="missing"),
+        # read by the notes write only: it fails while the contacts and
+        # needs writes running beside it succeed
+        pytest.param(
+            "renamed", "original_triage_notes", "import_data", id="notes_renamed"
+        ),
+        pytest.param(
+            "missing", "original_triage_notes", "import_data", id="notes_missing"
+        ),
+    ],
+)
+def test_staging_header_drift_fails_loudly(
+    spark, pipelines, tmp_path, drift, name, column
+):
     """A drifted staging header stops run-import with the file named,
-    instead of padding the column with NULL."""
+    instead of padding the column with NULL, and no table is swapped in
+    or left half-written, whichever of the concurrent writes fails."""
     _, staging1, db1 = pipelines[1]
     staging, db = tmp_path / "staging", tmp_path / "db"
     shutil.copytree(staging1, staging)
     shutil.copytree(db1, db)
-    target = staging / "food_needs.csv"
+    target = staging / f"{name}.csv"
     with open(target, newline="") as fh:
         rows = list(csv.reader(fh))
-    col = rows[0].index("user_id")
+    col = rows[0].index(column)
     if drift == "renamed":
         rows[0][col] = "user"
     else:
@@ -228,6 +246,43 @@ def test_staging_header_drift_fails_loudly(spark, pipelines, tmp_path, drift):
     before = _db_hashes(spark, db)
     with _cli_session(spark), pytest.raises(Exception) as ei:
         _run(["run-import", "-d", str(db), "-s", str(staging)])
-    assert "food_needs.csv" in str(ei.value)
+    assert f"{name}.csv" in str(ei.value)
     assert _db_hashes(spark, db) == before  # nothing swapped in
     assert not list(db.glob("*.new"))
+
+
+def test_etl_plans_use_no_icu_case_mapping(spark, pipelines, tmp_path, monkeypatch):
+    """No plan of prepare-contacts, prepare-calls or run-import
+    evaluates ``lower``/``upper``/``initcap``: the first of those a JVM
+    evaluates builds Spark's ICU case tables, ~1.5 s on one core, which
+    every CLI process would pay.  Frames pinned with ``localCheckpoint``
+    hide their plans from the outputs', so those are checked too."""
+    from beacon_data_importer_spark.plans.calls import CallsUsers, prepare_calls
+    from beacon_data_importer_spark.plans.contacts import prepare_contacts
+    from beacon_data_importer_spark.plans.import_stage import import_outputs
+
+    def analyzed(df) -> str:
+        return df._jdf.queryExecution().analyzed().toString()
+
+    plans: dict[str, str] = {}
+    frame_class = type(spark.range(0))
+    checkpoint = frame_class.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        plans[f"checkpoint {len(plans)}"] = analyzed(self)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_class, "localCheckpoint", recording_checkpoint)
+    calls_csv, gds_csv = _write_inputs(tmp_path, 1)
+    _, staging, db = pipelines[1]
+    frames = {"contacts.csv": prepare_contacts(spark, gds_csv, NOW)}
+    frames.update(prepare_calls(spark, calls_csv, CallsUsers(101, 102, 103, 104)))
+    frames.update(import_outputs(spark, str(db), str(staging)))
+    plans.update({name: analyzed(df) for name, df in frames.items()})
+
+    assert len(plans) == 1 + len(STAGING) + len(TABLES) + 2  # base, triage ids
+    found = {
+        name: [f for f in ("lower(", "upper(", "initcap(") if f in plan]
+        for name, plan in plans.items()
+    }
+    assert not {name: fs for name, fs in found.items() if fs}

@@ -5,11 +5,17 @@ bridging, two-format embedded dates)."""
 from __future__ import annotations
 
 import datetime
+import string
 
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from beacon_data_importer_spark.functions import expressions as E
+from beacon_data_importer_spark.plans.calls import _call_note_category_and_count
+from beacon_data_importer_spark.plans.import_stage import parse_staging_bool
 
 
 def one(df, colexpr):
@@ -127,3 +133,136 @@ def test_string_agg_deterministic(spark):
     df = spark.createDataFrame([Row(k=1, v="b"), Row(k=1, v="a"), Row(k=1, v="c")])
     out = df.groupBy("k").agg(E.string_agg("v").alias("s")).collect()[0].s
     assert out == "a, b, c"
+
+
+# ---------------------------------------------------------------------------
+# the ASCII case fold: every folded helper equals its F.lower form
+# ---------------------------------------------------------------------------
+
+#: code points whose case mappings are not ASCII to ASCII: dotted and
+#: dotless i, the Kelvin sign, both sharp s, upper and final sigma, long
+#: s, e acute
+_ADVERSARIAL = "İı\u212aßẞΣςſé"
+_LOOKALIKES = {"i": "İı", "k": "\u212a", "s": "ſßẞΣς", "e": "é"}
+#: the literals the folded helpers compare with
+_LITERALS = [
+    "yes",
+    "no",
+    "true",
+    "false",
+    "priority 1",
+    "no -1 attempt made",
+    "invalid phone numbers",
+    "no 2 attempts made",
+    "no 3 attempts made",
+]
+_COMPLETED = ["yes", "no 3 attempts made"]
+
+
+def _near(literal: str):
+    """The literal with each letter in either case or a look-alike."""
+    return st.tuples(
+        *[st.sampled_from([ch, ch.upper(), *_LOOKALIKES.get(ch, "")]) for ch in literal]
+    ).map("".join)
+
+
+_fold_values = st.lists(
+    st.one_of(
+        st.text(
+            alphabet=string.ascii_letters + string.digits + " " + _ADVERSARIAL,
+            max_size=12,
+        ),
+        st.tuples(
+            st.sampled_from(["", " "]),
+            st.sampled_from(_LITERALS).flatmap(_near),
+            st.sampled_from(["", " "]),
+        ).map("".join),
+    ),
+    min_size=1,
+    max_size=60,
+)
+
+
+def _where_lower_is_ascii(fold):
+    return lambda c: F.when(F.lower(c).rlike("^[\\x00-\\x7f]*$"), fold(c))
+
+
+#: (folded helper, its F.lower form)
+_FOLDED = {
+    # the contract: equal wherever lower() gives an all-ASCII string
+    "ascii_lower": (
+        _where_lower_is_ascii(E.ascii_lower),
+        _where_lower_is_ascii(F.lower),
+    ),
+    "ascii_lower_of_lower": (lambda c: E.ascii_lower(F.lower(c)), F.lower),
+    "nullify_no": (
+        E.nullify_no,
+        lambda c: F.when((F.lower(F.trim(c)) != "no") & (F.trim(c) != ""), c),
+    ),
+    "parse_food_priority": (
+        E.parse_food_priority,
+        lambda c: E.regex_extract_or_null(F.lower(c), r"priority (\d)", 1),
+    ),
+    "parse_yes_no": (
+        E.parse_yes_no,
+        lambda c: F.when(F.lower(F.trim(c)) == "yes", F.lit(True)).when(
+            F.lower(F.trim(c)) == "no", F.lit(False)
+        ),
+    ),
+    "determine_completion": (
+        lambda c: E.determine_completion(c, _COMPLETED, F.lit(1)),
+        lambda c: F.when(F.lower(c).isin(*_COMPLETED), F.lit(1)),
+    ),
+    "parse_staging_bool": (
+        parse_staging_bool,
+        lambda c: F.when(F.lower(c) == "true", F.lit(True)).when(
+            F.lower(c) == "false", F.lit(False)
+        ),
+    ),
+}
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(_fold_values)
+@example(
+    [*_ADVERSARIAL, "\u212a9", " YES ", "No", "TRUE", "fAlSe", "PRİORITY 1", "No 3 attempts MADE"]
+)
+def test_ascii_fold_equals_lower(spark, values):
+    """Each helper that folds with ``ascii_lower`` returns exactly the
+    column its ``F.lower`` form returns, on strings built to break an
+    ASCII-only fold.  The call-note category reads its column itself, so
+    its ``F.lower`` form is the same expression over pre-lowered input
+    (the fold of a lowered string is that string: the
+    ``ascii_lower_of_lower`` case)."""
+    df = spark.createDataFrame(
+        [Row(s=v, outcome="Left voicemail") for v in values],
+        "s string, outcome string",
+    )
+    category, count = _call_note_category_and_count()
+    names = [*_FOLDED, "note_category", "note_count"]
+
+    def rows(form: int, was_contact_made):
+        cols = [pair[form](F.col("s")).alias(n) for n, pair in _FOLDED.items()]
+        return (
+            df.withColumn("was_contact_made", was_contact_made)
+            .select("s", *cols, category.alias("note_category"), count.alias("note_count"))
+            .collect()
+        )
+
+    got, want = rows(0, F.col("s")), rows(1, F.lower("s"))
+    for g, w in zip(got, want):
+        diff = [n for n in names if g[n] != w[n]]
+        assert not diff, f"{g.s!r}: {diff}"
+
+
+def test_case_folded_comparison_rejects_non_ascii_literal(spark):
+    """The fold equals ``lower`` only against ASCII literals, so a
+    non-ASCII one is refused instead of silently never matching."""
+    with pytest.raises(ValueError, match="ASCII"):
+        E.determine_completion("s", ["yes", "sí"], "d")
+    # an exact (case-sensitive) comparison takes any literal
+    df = col_of(spark, ["sí", "SÍ"], name="s").withColumn("d", F.lit(1))
+    got = [r.v for r in df.select(
+        E.determine_completion("s", ["sí"], "d", case_insensitive=False).alias("v")
+    ).collect()]
+    assert got == [1, None]
